@@ -54,22 +54,12 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.ui.enabled", "false")
+    val spark = GraftSession.builder(s"local[$cpus]", cpus.toInt)
       // 490 query executions full of localCheckpoints pin shuffle/
       // RDD blocks until a driver GC lets the ContextCleaner run;
       // the default 30min periodic GC never fires inside a bench
       // pass, so late queries measured block-starved executors.
       .config("spark.cleaner.periodicGC.interval", "60s")
-      // bounded-buffer object aggregates must keep the hash path at
-      // high group cardinality (8.9x on the kNN graph — rationale in
-      // GraftSession.scala)
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "1000000")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // warm the JVM/codegen/FS once so per-query numbers measure the

@@ -44,49 +44,14 @@ object GraftConf {
     */
   val AnnFitMaxSample = "spark.graft.ann.fitMaxSample"
 
-  /** Wedge self-join shape for triangle counting: "e1e2" (default,
-    * projections below the join), "self" (one reused exchange), or
-    * "selfhash" ("self" + shuffle_hash hint). A/B instrumentation —
-    * all three are result-identical (graft.tools.TriWedgeProbe).
-    */
-  val TriWedgeVariant = "spark.graft.graph.triWedgeVariant"
-
-  /** Materialization gate for [[graft.operators.GraphOps.linkPrediction]]'s
-    * 4×-consumed edge/degree subtrees. Default ON (same-JVM probe:
-    * the replayed capped-collect build is genuinely expensive).
-    */
-  val LinkPredMaterialize = "spark.graft.graph.linkPredMaterialize"
-
-  /** Materialization gate for [[graft.operators.MiningOps]]'s
-    * multi-consumer basket frames. Unset = auto-decide from the
-    * frame's estimated size vs [[MiningMaterializeAutoBytes]];
-    * "true"/"false" force it.
-    */
-  val MiningMaterialize = "spark.graft.mining.materialize"
-
-  /** Estimated-bytes threshold above which the mining gate
-    * auto-materializes (see [[MiningMaterialize]]).
+  /** Estimated-bytes threshold above which
+    * [[graft.operators.MiningOps]] materializes its multi-consumer
+    * basket frames instead of recomputing them per consumer.
     */
   val MiningMaterializeAutoBytes = "spark.graft.mining.materializeAutoBytes"
 
   def triangleBroadcastMaxEdges(spark: SparkSession): Long =
     longConf(spark, TriangleBroadcastMaxEdges, 16000000L)
-
-  def triWedgeVariant(spark: SparkSession): String =
-    spark.conf.getOption(TriWedgeVariant).map(_.trim.toLowerCase) match {
-      case None => "e1e2"
-      case Some(v @ ("e1e2" | "self" | "selfhash")) => v
-      case Some(other) => throw new IllegalArgumentException(
-        s"$TriWedgeVariant must be one of e1e2|self|selfhash, got '$other'")
-    }
-
-  def linkPredMaterialize(spark: SparkSession): Boolean =
-    boolConf(spark, LinkPredMaterialize, default = true)
-
-  /** None = unset (caller auto-decides); Some = forced. */
-  def miningMaterialize(spark: SparkSession): Option[Boolean] =
-    spark.conf.getOption(MiningMaterialize)
-      .map(_ => boolConf(spark, MiningMaterialize, default = false))
 
   def miningMaterializeAutoBytes(spark: SparkSession): Long =
     longConf(spark, MiningMaterializeAutoBytes, 1L << 30)
@@ -102,23 +67,6 @@ object GraftConf {
     require(v > 0 && v <= Int.MaxValue, s"$AnnFitMaxSample must be in (0, 2^31), got $v")
     v.toInt
   }
-
-  /** Strict boolean conf: the gate defaults live at the call sites,
-    * literally, and a typo'd value raises naming the key instead of
-    * silently selecting a default (ADVICE r16: `_.toBoolean` threw
-    * uncontextualized on '1'/'yes'/'' and the forall-vs-exists
-    * distinction hid which way each gate defaulted).
-    */
-  def boolConf(spark: SparkSession, key: String, default: Boolean): Boolean =
-    spark.conf.getOption(key) match {
-      case None => default
-      case Some(s) => s.trim.toLowerCase match {
-        case "true" | "1" | "yes" | "on"  => true
-        case "false" | "0" | "no" | "off" => false
-        case other => throw new IllegalArgumentException(
-          s"$key must be a boolean, got '$other'")
-      }
-    }
 
   private def longConf(spark: SparkSession, key: String, default: Long): Long =
     spark.conf.getOption(key) match {

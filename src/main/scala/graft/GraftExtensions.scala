@@ -9,7 +9,7 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Li
 
 /** SQL surface for graft's custom expressions.
   *
-  * New sessions: `SparkSession.builder().withExtensions(new
+  * New sessions: `GraftSession.builder().withExtensions(new
   * GraftExtensions)` or `spark.sql.extensions=graft.GraftExtensions`.
   * Existing sessions: `GraftExtensions.register(spark)`.
   *

@@ -39,10 +39,4 @@ object GraftSession {
       // 200 MB/task ceiling — safe at executor sizes that could run
       // the aggregation at all.
       .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "1000000")
-
-  def getOrCreate(): SparkSession = {
-    val s = builder().getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
 }

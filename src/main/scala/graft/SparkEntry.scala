@@ -16,39 +16,54 @@ object SparkEntry {
 
   private def t(dir: String, name: String) = s"$dir/$name.parquet"
 
+  /** Scratch root for the registry's throwaway fixture state: the
+    * index-lifecycle queries' save/append/reload round-trips and the
+    * streaming runs' checkpoints. One root per JVM,
+    * `<SPARK_GRAFT_SCRATCH or java.io.tmpdir>/graft-scratch/<pid>`, on
+    * disk by default like the storage production deployments pass to
+    * the save/load APIs and to `checkpointLocation`. (tmpfs
+    * checkpoints read 0.3-0.4 s/query faster in one isolated probe,
+    * SCALEPROBE_r11.md §2, and 15-20 % slower over the whole
+    * streaming family in an interleaved A/B, SCALEPROBE_r14.md §4.)
+    */
+  private lazy val scratchRoot: java.nio.file.Path = openScratchRoot(
+    java.nio.file.Paths.get(
+      sys.env.getOrElse("SPARK_GRAFT_SCRATCH", System.getProperty("java.io.tmpdir")),
+      "graft-scratch"))
+
+  /** This JVM's `<pid>` root under `parent`, created after deleting
+    * every sibling `<pid>` root whose process is gone — what a JVM
+    * killed before its exit hooks ran leaves behind. A live sibling's
+    * root (parallel forked test JVMs share `parent`) is never touched.
+    */
+  private[graft] def openScratchRoot(parent: java.nio.file.Path): java.nio.file.Path = {
+    val self = ProcessHandle.current().pid()
+    Option(parent.toFile.listFiles()).getOrElse(Array.empty[java.io.File]).foreach { f =>
+      f.getName.toLongOption.foreach { pid =>
+        if (pid != self && !ProcessHandle.of(pid).filter(_.isAlive).isPresent)
+          deleteRecursively(f)
+      }
+    }
+    java.nio.file.Files.createDirectories(parent.resolve(self.toString))
+  }
+
+  /** Best-effort: a file that vanishes mid-walk (another JVM sweeping
+    * the same dead root) is skipped, and symlinks are unlinked, never
+    * followed. */
+  private def deleteRecursively(f: java.io.File): Unit = {
+    if (!java.nio.file.Files.isSymbolicLink(f.toPath))
+      Option(f.listFiles()).foreach(_.foreach(deleteRecursively))
+    f.delete()
+    ()
+  }
+
   /** Query-scoped scratch dir, deleted at JVM exit via Hadoop's
     * deleteOnExit hook. Registry queries materialize persisted
     * artifacts (indexes, sinks, caches) that their RESULT frames
-    * read lazily, so deletion cannot be eager — but without the
-    * hook, repeated bench/verify passes accumulate orphaned index
-    * copies under /tmp until the disk fills.
+    * read lazily, so deletion cannot be eager.
     */
-  /** Scratch root for the index-lifecycle queries' save/append/
-    * reload round-trips: tmpfs when the host has it (the same
-    * disclosed harness discipline as the streaming checkpoints'
-    * shmCheckpointBase — these directories are throwaway fixture
-    * state, deleted on exit, never durable index storage; production
-    * deployments pass real storage paths to the save/load APIs
-    * directly). /dev/shm keeps the 13 lifecycle queries measuring
-    * the index computation instead of the sandbox's one shared
-    * spinning-metal root. Override with SPARK_GRAFT_SCRATCH;
-    * SPARK_GRAFT_SCRATCH=/tmp restores the r16 behavior for A/Bs.
-    */
-  private lazy val scratchBase: Option[java.nio.file.Path] =
-    sys.env.get("SPARK_GRAFT_SCRATCH").map(java.nio.file.Paths.get(_)).orElse {
-      val d = new java.io.File("/dev/shm")
-      if (d.isDirectory && d.canWrite) Some(java.nio.file.Paths.get("/dev/shm")) else None
-    }.map { base =>
-      val p = base.resolve("graft-scratch")
-      java.nio.file.Files.createDirectories(p)
-      p
-    }
-
   private def tmpDir(s: SparkSession, prefix: String): String = {
-    val d = scratchBase
-      .map(b => java.nio.file.Files.createTempDirectory(b, prefix))
-      .getOrElse(java.nio.file.Files.createTempDirectory(prefix))
-      .toString
+    val d = java.nio.file.Files.createTempDirectory(scratchRoot, prefix).toString
     val p = new org.apache.hadoop.fs.Path(d)
     p.getFileSystem(s.sparkContext.hadoopConfiguration).deleteOnExit(p)
     d
@@ -4373,27 +4388,6 @@ object SparkEntry {
     * the driver's batch-compare grade a genuine streaming
     * execution.
     */
-  /** Checkpoint base for the harness's throwaway streaming runs:
-    * tmpfs when the host has it. The offset WAL, commit log, and
-    * state-store delta/changelog files are pure harness overhead
-    * here (each query's checkpoint is fresh and discarded), and on
-    * tmpfs they cost ~0.3-0.4 s less per query (StreamFloorProbe
-    * shm variant: 2.02 → 1.70 s at sf0.1). Production deployments
-    * point checkpointLocation at durable storage — this path is the
-    * bench/verify harness only, never library code.
-    */
-  private lazy val shmCheckpointBase: Option[String] = {
-    val d = new java.io.File("/dev/shm")
-    if (d.isDirectory && d.canWrite) Some("/dev/shm/graft-ckpt") else None
-  }
-
-  private def deleteRecursively(path: java.io.File): Unit = {
-    val fs = path.listFiles()
-    if (fs != null) fs.foreach(deleteRecursively)
-    path.delete()
-    ()
-  }
-
   private def runStreamToMemory(
       df: DataFrame,
       prefix: String,
@@ -4407,8 +4401,8 @@ object SparkEntry {
     // batch, and TERMINATES. awaitTermination is then a complete-
     // output barrier by the trigger's own contract, replacing the
     // r9 harness's processAllAvailable + 400 ms batch-quiescence
-    // heuristic. Floor measured in tools/StreamFloorProbe: ~2.1 s
-    // → ~1.6 s per query steady-state at sf0.01.
+    // heuristic. Floor measured ~2.1 s → ~1.6 s per query
+    // steady-state at sf0.01 (SCALEPROBE_r10.md §5).
     //
     // quiesce=false marks a STATELESS stream (stream-static join,
     // broadcast-filter): nothing evicts and nothing emits on
@@ -4432,7 +4426,7 @@ object SparkEntry {
     // own progress, not assumed.
     require(mode == "append" || mode == "update", s"mode must be append|update, got $mode")
     val evict = quiesce && mode == "append"
-    val ckpt = shmCheckpointBase.map(b => s"$b/$name")
+    val ckpt = scratchRoot.resolve(name).toFile
     val w0 = df.writeStream.format("memory").queryName(name)
       .outputMode(mode)
       .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
@@ -4441,7 +4435,7 @@ object SparkEntry {
     val prevNoData = sess.conf.getOption(NoDataKey)
     if (!evict) sess.conf.set(NoDataKey, "false")
     val q =
-      try ckpt.fold(w0)(c => w0.option("checkpointLocation", c)).start()
+      try w0.option("checkpointLocation", ckpt.toString).start()
       finally if (!evict) {
         prevNoData.fold(sess.conf.unset(NoDataKey))(v => sess.conf.set(NoDataKey, v))
       }
@@ -4468,8 +4462,8 @@ object SparkEntry {
     } finally {
       q.stop()
       // a named checkpoint is not auto-cleaned the way engine temp
-      // checkpoints are — reclaim the tmpfs
-      ckpt.foreach(c => deleteRecursively(new java.io.File(c)))
+      // checkpoints are
+      deleteRecursively(ckpt)
     }
     df.sparkSession.table(name)
   }

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -7,13 +6,7 @@ object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.ui.enabled", "false")
+    val spark = GraftSession.builder(s"local[$cpus]", cpus.toInt)
       // free pinned checkpoint/shuffle blocks between queries (see
       // Bench.scala) — a 245-query pass otherwise never driver-GCs
       .config("spark.cleaner.periodicGC.interval", "60s")
@@ -25,10 +18,6 @@ object Verify {
       // a saturated box can't kill its own sweep.
       .config("spark.executor.heartbeatInterval", "60s")
       .config("spark.network.timeout", "1200s")
-      // bounded-buffer object aggregates must keep the hash path at
-      // high group cardinality (8.9x on the kNN graph — rationale in
-      // GraftSession.scala)
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "1000000")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // big-SF sweeps: let streams run past the default 120 s cap

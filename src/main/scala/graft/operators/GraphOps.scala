@@ -56,13 +56,7 @@ object GraphOps {
     var prevCount = edges.count()
     var converged = prevCount == 0
     var iter = 0
-    // per-round telemetry for scale probes (spark.graft.graph.ccLog):
-    // round wall × edge count is the number that decides whether CC
-    // is the pipeline bottleneck at a given graph size
-    val ccLog = edges0.sparkSession.conf
-      .getOption("spark.graft.graph.ccLog").exists(_.toBoolean)
     while (!converged && iter < maxIter) {
-      val tRound = System.nanoTime()
       // ---- large-star over the symmetrized neighborhood ----
       // min-maps are node-sized (one row per endpoint): broadcast
       // them under the ceiling so the edge-sized sides never shuffle
@@ -88,15 +82,8 @@ object GraphOps {
       // fixpoint: the edge set is stable (both sides are distinct
       // canonical sets, so count-equal + one-sided except = equality)
       val nextCount = next.count()
-      val tCheck = System.nanoTime()
       converged = nextCount == prevCount &&
         next.exceptAll(edges).limit(1).isEmpty
-      if (ccLog) {
-        val tEnd = System.nanoTime()
-        println(f"[ccLog] round $iter%d: edges $prevCount%d -> $nextCount%d, " +
-          f"stars+checkpoint ${(tCheck - tRound) / 1e9}%.1f s, " +
-          f"fixpoint check ${(tEnd - tCheck) / 1e9}%.1f s")
-      }
       // round N's blocks are dead once round N+1 is materialized and
       // the fixpoint check above has read them
       dropSupersededCheckpoint(edges)
@@ -449,37 +436,17 @@ object GraphOps {
       when(lowIsU, col("v")).otherwise(col("u")).as("dst"),
       when(lowIsU, col("dv")).otherwise(col("du")).as("ddeg"))
       .localCheckpoint(true)
-    // Wedge self-join variant switch (r16 A/B instrumentation —
-    // graft.tools.TriWedgeProbe alternates the three shapes in one
-    // JVM, the only A/B this host's 2-3x oscillation cannot
-    // corrupt). Probe verdict: all three are equivalent in clean
-    // rounds (wall 2.4-2.8 s, the struct-compare over the 82M
-    // wedge candidates dominates every variant); "e1e2" read
-    // lowest CPU (19.5/21.6 s vs 24-25.5) and is the default —
-    // the exchange saved by "self"'s ReuseExchange and the sorts
-    // saved by "selfhash" are both noise next to the wedge scan.
-    //  "self"     — both sides the bare `oriented` frame (one
-    //               reused exchange, sort-merge)
-    //  "selfhash" — "self" + shuffle_hash hint
-    //  "e1e2"     — projections below the join, two exchanges,
-    //               sort-merge (the long-standing shape)
-    val wedgeVariant = graft.GraftConf.triWedgeVariant(e.sparkSession)
-    val wedges0 = wedgeVariant match {
-      case "e1e2" =>
-        val e1 = oriented.select(col("src"), col("dst").as("b"), col("ddeg").as("db"))
-        val e2 = oriented.select(col("src"), col("dst").as("c"), col("ddeg").as("dc"))
-        e1.join(e2, Seq("src"))
-          .filter(struct(col("db"), col("b")) < struct(col("dc"), col("c")))
-          .select(col("src"), col("b"), col("c"))
-      case v => // "self" | "selfhash" — validated by the conf reader
-        val wr = if (v == "selfhash") oriented.as("wr").hint("shuffle_hash")
-                 else oriented.as("wr")
-        oriented.as("wl")
-          .join(wr,
-            col("wl.src") === col("wr.src") &&
-              struct(col("wl.ddeg"), col("wl.dst")) < struct(col("wr.ddeg"), col("wr.dst")))
-          .select(col("wl.src").as("src"), col("wl.dst").as("b"), col("wr.dst").as("c"))
-    }
+    // Wedges: projections below the self-join, so the two sides
+    // shuffle separately and sort-merge. A single reused exchange
+    // ("self") and a shuffle_hash hint on it were measured
+    // result-identical and no faster: the struct-compare over the
+    // ~82M wedge candidates at sf0.1 dominates every shape, and this
+    // one read the lowest CPU (OPTIMIZATION_r16.md §3a, §3b).
+    val e1 = oriented.select(col("src"), col("dst").as("b"), col("ddeg").as("db"))
+    val e2 = oriented.select(col("src"), col("dst").as("c"), col("ddeg").as("dc"))
+    val wedges0 = e1.join(e2, Seq("src"))
+      .filter(struct(col("db"), col("b")) < struct(col("dc"), col("c")))
+      .select(col("src"), col("b"), col("c"))
     // Close-key representation: when node ids are integral and in
     // [0, 2³¹) — checked against the ACTUAL min/max over the
     // node-sized degree table, one cheap aggregate — pack (b, c)
@@ -1419,21 +1386,19 @@ object GraphOps {
     // anti-join; an aggregate-built edge frame (coOccurrenceEdges —
     // a join + capped collect at q_link_pred) would replay per use:
     // the r16 plan audit counted the capped-collect subtree executed
-    // 4x. Default ON by the same-JVM alternating probe
-    // (graft.tools.MatProbe: materialized wall 1.74-2.17 s vs
-    // recompute 2.07-2.62 s, consistent across all 4 rounds — the
-    // replayed capped-collect here is genuinely expensive, unlike
-    // MiningOps' cheap distinct, whose gate defaults OFF).
-    val matOn = graft.GraftConf.linkPredMaterialize(edges0.sparkSession)
-    def mat(df: DataFrame): DataFrame =
-      if (matOn) df.localCheckpoint(true) else df
-    val und = mat(edges0.filter(col("src") =!= col("dst"))
+    // 4x. Materializing und and deg won in every round of a same-JVM
+    // alternation (wall 1.74-2.17 s vs 2.07-2.62 s recomputed,
+    // OPTIMIZATION_r16.md §3) — the replayed capped-collect here is
+    // genuinely expensive, unlike MiningOps' cheap distinct.
+    val und = edges0.filter(col("src") =!= col("dst"))
       .select(least(col("src"), col("dst")).as("u"), greatest(col("src"), col("dst")).as("v"))
-      .distinct())
+      .distinct()
+      .localCheckpoint(true)
     val sym = und.select(col("u").as("a"), col("v").as("z"))
       .union(und.select(col("v").as("a"), col("u").as("z")))
-    val deg = mat(sym.groupBy(col("z")).agg(count(lit(1)).as("deg"))
-      .filter(col("deg") <= maxDegree && col("deg") >= 2))
+    val deg = sym.groupBy(col("z")).agg(count(lit(1)).as("deg"))
+      .filter(col("deg") <= maxDegree && col("deg") >= 2)
+      .localCheckpoint(true)
     val spokes = sym.join(deg, "z")
     val wedges = spokes.select(col("z"), col("a"), col("deg"))
       .join(spokes.select(col("z"), col("a").as("b")), Seq("z"))

@@ -1377,7 +1377,7 @@ object IvfKnnOps {
     *   m lookups instead of m·subDim float ops. MEASURED SLOWER
     *   here and left off by default: at 40 M candidates (dim 512,
     *   m 16, 10 k-vector lists) direct scored 8.0 s vs LUT 14.1 s,
-    *   and at the 20× ScaleProbe (dim 64) 2.1 s vs 2.7 s — per-
+    *   and at 20× registry scale (dim 64) 2.1 s vs 2.7 s — per-
     *   candidate join/aggregate row machinery costs ~µs while the
     *   saved arithmetic is ~0.1 µs, so the LUT's m·k-double rows
     *   only fatten the probe broadcast. The classic FAISS win

@@ -13,27 +13,22 @@ object MiningOps {
   private def snap9(c: Column): Column =
     floor(c * lit(1e9) + lit(0.5)) / lit(1e9)
 
-  /** Eager materialization of a multi-consumer sub-frame. Forced
-    * via `spark.graft.mining.materialize`; when unset, AUTO-decided
+  /** Eager materialization of a multi-consumer sub-frame, decided
     * from the frame's optimizer size estimate vs
-    * `spark.graft.mining.materializeAutoBytes` (default 1 GiB) —
-    * so the decision scales with the input instead of riding a
-    * static default that is only right at one scale (the r16
-    * verdict's "decide from input stats, not a conf"). Below the
-    * threshold recompute-from-lineage wins — the r16 same-JVM
-    * alternating probe (graft.tools.MatProbe) measured it FASTER at
-    * bench scale (q_item_sim wall ~2.9 vs ~3.8 s, q_rules a wash):
-    * each replay is column-pruned, AQE-coalesced and page-cached,
-    * while eager checkpoints serialize the query into extra
-    * sequential jobs. Above it (corpus-scale inputs) the replays
-    * re-shuffle corpus-sized bytes once per consumer (items feeds
-    * 3-5 consumers) and the page cache no longer hides the re-scan.
+    * `spark.graft.mining.materializeAutoBytes` (default 1 GiB), so
+    * the decision scales with the input. Below the threshold
+    * recompute-from-lineage wins: a same-JVM alternation measured it
+    * faster at bench scale (q_item_sim wall 2.20-2.75 vs 2.70-3.26 s,
+    * q_rules a wash on CPU — OPTIMIZATION_r16.md §3), since each
+    * replay is column-pruned, AQE-coalesced and page-cached while
+    * eager checkpoints serialize the query into extra sequential
+    * jobs. Above it (corpus-scale inputs) the replays re-shuffle
+    * corpus-sized bytes once per consumer (items feeds 3-5
+    * consumers) and the page cache no longer hides the re-scan.
     */
   private def mat(df: DataFrame): DataFrame = {
-    val on = graft.GraftConf.miningMaterialize(df.sparkSession).getOrElse {
-      df.queryExecution.optimizedPlan.stats.sizeInBytes >
-        BigInt(graft.GraftConf.miningMaterializeAutoBytes(df.sparkSession))
-    }
+    val on = df.queryExecution.optimizedPlan.stats.sizeInBytes >
+      BigInt(graft.GraftConf.miningMaterializeAutoBytes(df.sparkSession))
     if (on) df.localCheckpoint(true) else df
   }
 

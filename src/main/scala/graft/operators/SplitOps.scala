@@ -230,7 +230,7 @@ object SplitOps {
     * [[StatsOps.groupQuantileExact]] — the DISTINCT-value
     * discipline (groupBy(bucket) counts + cumulative windows),
     * because Spark's own `percentile` aggregate BUFFERS every
-    * value and a 50M-row probe OOMs it (ScaleProbeR8f; the RFM
+    * value and a 50M-row probe OOMs it (SCALEPROBE_r08.md; the RFM
     * precedent only works over pre-collapsed customer frames). The
     * bucketing is what makes the distinct frame CALENDAR-bounded —
     * at 1s granularity a year of data is ≤ 3.2·10⁷ quantile rows

@@ -1,9 +1,8 @@
 package graft.tools
 
-import graft.SparkEntry
+import graft.{GraftSession, SparkEntry}
 import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
-import org.apache.spark.sql.SparkSession
-import java.util.concurrent.atomic.{AtomicLong, LongAdder}
+import java.util.concurrent.atomic.LongAdder
 
 /** Drift-insensitive work meter for A/B comparisons on an
   * oscillating host: per query, sum task-level executor CPU time,
@@ -20,15 +19,8 @@ object WorkMeter {
     val names = args(0).split(",").map(_.trim).filter(_.nonEmpty)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.ui.enabled", "false")
+    val spark = GraftSession.builder(s"local[$cpus]", cpus.toInt)
       .config("spark.cleaner.periodicGC.interval", "60s")
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "1000000")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val cpu = new LongAdder; val run = new LongAdder; val tasks = new LongAdder

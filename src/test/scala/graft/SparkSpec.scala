@@ -8,16 +8,7 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 object TestSpark {
   lazy val spark: SparkSession = {
-    val s = SparkSession
-      .builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val s = GraftSession.builder("local[4]", 4).getOrCreate()
     s.sparkContext.setLogLevel("ERROR")
     s
   }
