@@ -1267,30 +1267,20 @@ object IvfKnnOps {
     PqIndex(centroids, books, encoded)
   }
 
-  /** Persist a PQ index: the m-byte codes partitioned by list (the
+  /** Persist a PQ index as the m-byte codes partitioned by list (the
     * same partition-pruned on-disk layout as [[saveIndex]] — probes
-    * read only their lists), plus tiny sidecar tables for the
-    * coarse centroids, subspace codebooks, optional OPQ rotation,
-    * and shape meta. Everything a fresh session needs to probe
-    * without refitting.
+    * read only their lists), then one binary [[PqStateFile]],
+    * `pq_state.bin`, holding the coarse centroids, subspace codebooks
+    * and optional OPQ rotation: everything a fresh session needs to
+    * probe without refitting. The state file is removed first and
+    * written last, so it marks a complete save.
     */
   def savePqIndex(index: PqIndex, path: String): Unit = {
+    val state = new org.apache.hadoop.fs.Path(path, PqStateFile.Name)
+    val fs = state.getFileSystem(index.encoded.sparkSession.sessionState.newHadoopConf())
+    fs.delete(state, false)
     index.encoded.write.mode("overwrite").partitionBy("list_id").parquet(s"$path/codes")
-    val spark = index.encoded.sparkSession
-    import spark.implicits._
-    index.centroids.toSeq.toDF("list_id", "centroid")
-      .coalesce(1).write.mode("overwrite").parquet(s"$path/centroids")
-    val b = index.codebooks
-    b.centers.zipWithIndex.flatMap { case (cs, s) =>
-      cs.zipWithIndex.map { case (c, k) => (s, k, c.toSeq) }
-    }.toSeq.toDF("sub", "code", "center")
-      .coalesce(1).write.mode("overwrite").parquet(s"$path/codebooks")
-    val rotRows: Seq[(Int, Seq[Double])] =
-      Option(b.rotation).map(_.zipWithIndex.map { case (r, i) => (i, r.toSeq) }.toSeq).getOrElse(Nil)
-    rotRows.toDF("row", "values")
-      .coalesce(1).write.mode("overwrite").parquet(s"$path/rotation")
-    Seq((b.m, b.subDim)).toDF("m", "subDim")
-      .coalesce(1).write.mode("overwrite").parquet(s"$path/meta")
+    PqStateFile.write(fs, state, index.centroids, index.codebooks)
   }
 
   /** Compact a persisted PQ index's codes directory: every
@@ -1350,21 +1340,12 @@ object IvfKnnOps {
       .write.mode("append").partitionBy("list_id").parquet(s"$path/codes")
   }
 
+  /** Reload a [[savePqIndex]] directory: the state file in one read,
+    * every shape checked, and `codes` as a lazy frame. */
   def loadPqIndex(spark: SparkSession, path: String): PqIndex = {
-    val centroids = spark.read.parquet(s"$path/centroids")
-      .collect().map(r => (r.getInt(0), r.getSeq[Double](1).toArray)).sortBy(_._1)
-    val meta = spark.read.parquet(s"$path/meta").collect()(0)
-    val (m, subDim) = (meta.getInt(0), meta.getInt(1))
-    val bookRows = spark.read.parquet(s"$path/codebooks")
-      .collect().map(r => (r.getInt(0), r.getInt(1), r.getSeq[Double](2).toArray))
-    val centers = (0 until m).map { s =>
-      bookRows.filter(_._1 == s).sortBy(_._2).map(_._3)
-    }.toArray
-    val rotRows = spark.read.parquet(s"$path/rotation")
-      .collect().map(r => (r.getInt(0), r.getSeq[Double](1).toArray))
-    val rotation = if (rotRows.isEmpty) null else rotRows.sortBy(_._1).map(_._2)
-    PqIndex(centroids, PqCodebooks(m, subDim, centers, rotation),
-      spark.read.parquet(s"$path/codes"))
+    val state = new org.apache.hadoop.fs.Path(path, PqStateFile.Name)
+    val (centroids, books) = PqStateFile.read(state.getFileSystem(spark.sessionState.newHadoopConf()), state)
+    PqIndex(centroids, books, spark.read.parquet(s"$path/codes"))
   }
 
   /** Top-k by APPROXIMATE L2 over PQ codes, probing nProbe lists —

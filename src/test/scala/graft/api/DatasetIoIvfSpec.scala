@@ -283,24 +283,98 @@ class DatasetIoIvfSpec extends SparkSpec {
     (0L until 10L).foreach(q => assert(top1(q) == q + 100000L, s"query $q top1 ${top1(q)}"))
   }
 
+  private def bits(v: Array[Double]): Seq[Long] = v.toSeq.map(java.lang.Double.doubleToRawLongBits)
+
+  private def stateBytes(dir: String): Seq[Byte] =
+    java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(dir, "pq_state.bin")).toSeq
+
   test("PQ index save/load round-trips codes, codebooks, and the OPQ rotation; probes work after reload") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-pqidx").toFile.getAbsolutePath
     val emb = BioLoader.load(spark, s"$sfDir/embeddings.parquet").select("vec_id", "embedding")
     val queries = emb.filter($"vec_id" < 5)
     val corpus = emb.union(queries.select(($"vec_id" + 100000L).as("vec_id"), $"embedding"))
-    val built = IvfKnnOps.buildPqIndex(corpus, "vec_id", "embedding", nLists = 8, m = 8, opq = true)
-    IvfKnnOps.savePqIndex(built, dir)
-    val loaded = IvfKnnOps.loadPqIndex(spark, dir)
-    assert(loaded.codebooks.m == built.codebooks.m && loaded.codebooks.subDim == built.codebooks.subDim)
-    assert(loaded.codebooks.rotation != null)
-    for (i <- built.codebooks.rotation.indices; j <- built.codebooks.rotation.indices)
-      assert(loaded.codebooks.rotation(i)(j) == built.codebooks.rotation(i)(j))
-    for (s <- 0 until built.codebooks.m; k <- built.codebooks.centers(s).indices)
-      assert(java.util.Arrays.equals(loaded.codebooks.centers(s)(k), built.codebooks.centers(s)(k)))
-    val top1 = IvfKnnOps.pqTopK(queries, loaded, "vec_id", "embedding", 5, nProbe = 8)
-      .filter($"rank" === 1)
-      .select("query_id", "neighbor_id").as[(Long, Long)].collect().toMap
-    (0L until 5L).foreach(q => assert(top1(q) == q + 100000L, s"query $q top1 ${top1(q)} after reload"))
+    for (opq <- Seq(false, true)) {
+      val dir = java.nio.file.Files.createTempDirectory("graft-pqidx").toFile.getAbsolutePath
+      val built = IvfKnnOps.buildPqIndex(corpus, "vec_id", "embedding", nLists = 8, m = 8, opq = opq)
+      IvfKnnOps.savePqIndex(built, dir)
+      assert(new java.io.File(dir).list().toSet.filterNot(_.startsWith(".")) == Set("codes", "pq_state.bin"))
+      val loaded = IvfKnnOps.loadPqIndex(spark, dir)
+      assert(loaded.codebooks.m == built.codebooks.m && loaded.codebooks.subDim == built.codebooks.subDim)
+      assert(loaded.centroids.map(_._1).toSeq == built.centroids.map(_._1).toSeq)
+      assert(loaded.centroids.map(c => bits(c._2)).toSeq == built.centroids.map(c => bits(c._2)).toSeq)
+      assert(loaded.codebooks.centers.map(_.map(bits).toSeq).toSeq == built.codebooks.centers.map(_.map(bits).toSeq).toSeq)
+      if (opq) assert(loaded.codebooks.rotation.map(bits).toSeq == built.codebooks.rotation.map(bits).toSeq)
+      else assert(loaded.codebooks.rotation == null)
+      val top1 = IvfKnnOps.pqTopK(queries, loaded, "vec_id", "embedding", 5, nProbe = 8)
+        .filter($"rank" === 1)
+        .select("query_id", "neighbor_id").as[(Long, Long)].collect().toMap
+      (0L until 5L).foreach(q => assert(top1(q) == q + 100000L, s"opq=$opq query $q top1 ${top1(q)} after reload"))
+    }
+  }
+
+  test("savePqIndex runs one Spark job and loadPqIndex at most one before the caller's first action") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-pqjobs").toFile.getAbsolutePath
+    val emb = BioLoader.load(spark, s"$sfDir/embeddings.parquet").select("vec_id", "embedding")
+    val built = IvfKnnOps.buildPqIndex(emb, "vec_id", "embedding", nLists = 8, m = 8, opq = true)
+    val sc = spark.sparkContext
+    val group = "pq-persist-jobs"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == group)) jobs.incrementAndGet()
+    }
+    def jobsIn(body: => Unit): Int = {
+      org.apache.spark.graftbridge.ListenerDrain(sc)
+      jobs.set(0)
+      sc.setJobGroup(group, group)
+      try body finally sc.clearJobGroup()
+      org.apache.spark.graftbridge.ListenerDrain(sc)
+      jobs.get
+    }
+    sc.addSparkListener(listener)
+    try {
+      assert(jobsIn(IvfKnnOps.savePqIndex(built, dir)) == 1)
+      assert(jobsIn(IvfKnnOps.loadPqIndex(spark, dir)) <= 1)
+    } finally sc.removeSparkListener(listener)
+  }
+
+  test("loadPqIndex rejects a directory without pq_state.bin, naming the path") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-pqmissing").toFile.getAbsolutePath
+    val emb = BioLoader.load(spark, s"$sfDir/embeddings.parquet").select("vec_id", "embedding")
+    IvfKnnOps.savePqIndex(IvfKnnOps.buildPqIndex(emb, "vec_id", "embedding", nLists = 4, m = 8), dir)
+    // codes alone is what a save interrupted before its state file, or
+    // an index in the older per-table layout, leaves behind
+    java.nio.file.Files.delete(java.nio.file.Paths.get(dir, "pq_state.bin"))
+    val e = intercept[IllegalArgumentException](IvfKnnOps.loadPqIndex(spark, dir))
+    assert(e.getMessage.contains(s"$dir/pq_state.bin") && e.getMessage.contains("missing"), e.getMessage)
+  }
+
+  test("loadPqIndex rejects a truncated, re-versioned, foreign or mis-shaped pq_state.bin, naming the path") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-pqcorrupt").toFile.getAbsolutePath
+    val emb = BioLoader.load(spark, s"$sfDir/embeddings.parquet").select("vec_id", "embedding")
+    IvfKnnOps.savePqIndex(IvfKnnOps.buildPqIndex(emb, "vec_id", "embedding", nLists = 4, m = 8, opq = true), dir)
+    val state = java.nio.file.Paths.get(dir, "pq_state.bin")
+    val good = java.nio.file.Files.readAllBytes(state)
+    def rejects(bytes: Array[Byte], why: String): Unit = {
+      java.nio.file.Files.write(state, bytes)
+      // the local file system checks a stale .crc before the reader sees the bytes
+      java.nio.file.Files.deleteIfExists(java.nio.file.Paths.get(dir, ".pq_state.bin.crc"))
+      val e = intercept[IllegalArgumentException](IvfKnnOps.loadPqIndex(spark, dir))
+      assert(e.getMessage.contains(state.toString) && e.getMessage.contains(why), e.getMessage)
+    }
+    def patched(at: Int, v: Int): Array[Byte] = {
+      val b = good.clone()
+      java.nio.ByteBuffer.wrap(b).putInt(at, v)
+      b
+    }
+    rejects(java.util.Arrays.copyOf(good, good.length - 8), "truncated")
+    rejects(java.util.Arrays.copyOf(good, 20), "truncated")
+    rejects(good ++ Array[Byte](0), "trailing bytes")
+    rejects(patched(0, 0x50415231), "bad magic")
+    rejects(patched(4, 99), "format version 99")
+    rejects(patched(16, 63), "centroid length 63 is not m*subDim")
+    java.nio.file.Files.write(state, good)
+    java.nio.file.Files.deleteIfExists(java.nio.file.Paths.get(dir, ".pq_state.bin.crc"))
+    assert(IvfKnnOps.loadPqIndex(spark, dir).codebooks.rotation != null)
   }
 
   test("appendToSavedPqIndex encodes with frozen quantizers and lands only in touched list partitions") {
@@ -308,12 +382,14 @@ class DatasetIoIvfSpec extends SparkSpec {
     val emb = BioLoader.load(spark, s"$sfDir/embeddings.parquet").select("vec_id", "embedding")
     val built = IvfKnnOps.buildPqIndex(emb, "vec_id", "embedding", nLists = 8, m = 8, opq = true)
     IvfKnnOps.savePqIndex(built, dir)
+    val stateBefore = stateBytes(dir)
     val partsBefore = new java.io.File(s"$dir/codes").listFiles()
       .filter(_.getName.startsWith("list_id=")).map(f => f.getName -> f.lastModified()).toMap
     // append an exact twin of query 3 — one vector, one list partition
     val twin = emb.filter($"vec_id" === 3L)
       .select(($"vec_id" + 100000L).as("vec_id"), $"embedding")
     IvfKnnOps.appendToSavedPqIndex(spark, dir, twin, "vec_id", "embedding")
+    assert(stateBytes(dir) == stateBefore, "append rewrote pq_state.bin")
     val loaded = IvfKnnOps.loadPqIndex(spark, dir)
     assert(loaded.encoded.count() == built.encoded.count() + 1)
     // the appended twin is retrievable with the frozen quantizers
@@ -332,6 +408,7 @@ class DatasetIoIvfSpec extends SparkSpec {
     val emb = BioLoader.load(spark, s"$sfDir/embeddings.parquet").select("vec_id", "embedding")
     val built = IvfKnnOps.buildPqIndex(emb, "vec_id", "embedding", nLists = 8, m = 8)
     IvfKnnOps.savePqIndex(built, dir)
+    val stateBefore = stateBytes(dir)
     for (a <- 1 to 5) {
       val batch = emb.limit(50).select(($"vec_id" + 100000L * a).as("vec_id"), $"embedding")
       IvfKnnOps.appendToSavedPqIndex(spark, dir, batch, "vec_id", "embedding")
@@ -346,6 +423,7 @@ class DatasetIoIvfSpec extends SparkSpec {
     val filesBefore = parquetFiles().size
     assert(filesBefore > 8, s"appends should accrete files, saw $filesBefore")
     IvfKnnOps.compactSavedPqIndex(spark, dir)
+    assert(stateBytes(dir) == stateBefore, "append or compaction rewrote pq_state.bin")
     assert(parquetFiles().size <= 8, s"compact left ${parquetFiles().size} files")
     assert(!new java.io.File(s"$dir/.codes.old").exists())
     assert(!new java.io.File(s"$dir/.codes.compact").exists())

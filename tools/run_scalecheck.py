@@ -5,7 +5,7 @@ through graft.Verify with the big-SF resilience settings, (3) grades
 every query against its DuckDB oracle — routing the handful of
 oracles DuckDB cannot evaluate at scale through the
 semantics-equivalent replays in replay_oracles.py — and (4) writes
-SCALECHECK_r{N}.json.
+SCALECHECK_r{N}.json (SCALECHECK_r{N}_only.json for an --only run).
 
 The r12 sweep caught five real scale bugs but lived in /tmp logs;
 this makes the whole loop reproducible:
@@ -18,7 +18,9 @@ Options:
                      via gen_sf.py 10x relational / 10x docs if absent)
     --out DIR        verify output dir (default /root/repo/tmp/verify_sf1)
     --skip-verify    grade an existing verify dump without re-running
-    --only a,b,c     grade a subset (replays/oracles still pick per-query)
+    --only a,b,c     grade a subset (replays/oracles still pick per-query);
+                     the record goes to SCALECHECK_r{N}_only.json, and a
+                     named query with no oracle counts as missing
     --timeout SEC    per-query DuckDB oracle budget (default 900)
     --workers N      parallel DuckDB compare processes (default 4)
 
@@ -189,13 +191,16 @@ def main():
     only = set(a.only.split(",")) if a.only else None
     oracle, results = grade(a.sf_dir, a.out, only, a.timeout, a.workers)
 
-    missing = sorted(set(oracle) - set(results)) if not only else []
+    # a subset run grades and records only the queries it names: it
+    # writes its own file, so a round's full record is never replaced
+    missing = sorted((only or set(oracle)) - set(results))
     bad = {k: v["detail"] for k, v in results.items() if not v["ok"]}
     record = {
         "round": a.round,
         "sf": ("1.0 (tools/gen_sf.py deterministic data: 10x relational / "
                "10x documents over sf0.1)"),
-        "n_queries": len(oracle),
+        **({"only": sorted(only)} if only else {}),
+        "n_queries": len(results) if only else len(oracle),
         "n_pass": sum(1 for v in results.values() if v["ok"]),
         "n_fail": len(bad),
         "missing": missing,
@@ -211,7 +216,7 @@ def main():
                  "union-find, all-pairs jaccard via prefix-filtered exact "
                  "enumeration)"),
     }
-    out_path = f"{REPO}/SCALECHECK_r{a.round:02d}.json"
+    out_path = f"{REPO}/SCALECHECK_r{a.round:02d}{'_only' if only else ''}.json"
     json.dump(record, open(out_path, "w"), indent=1)
     print(f"[scalecheck] {record['n_pass']}/{record['n_queries']} pass, "
           f"{record['n_fail']} fail, {len(missing)} missing -> {out_path}")
